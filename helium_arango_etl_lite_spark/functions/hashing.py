@@ -44,11 +44,6 @@ def hash64(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def hash64_oracle_sql(expr: str) -> str:
-    """DuckDB SQL rendering of :func:`hash64` over SQL expression ``expr``."""
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
 def minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     """Seeded (a, b) pairs for ``(a*x + b) mod (2^31-1)`` (shared with the
     oracle SQL generator). a, b < 2^31 and x < 2^32 keep products < 2^63."""

@@ -63,14 +63,6 @@ def link_quality(edges: DataFrame, group: list[str], signal: str = "signal", snr
     )
 
 
-def distinct_counterparties(edges: DataFrame, key: str, counterparty: str) -> DataFrame:
-    """Exact distinct count per key; swap in approx_count_distinct at the
-    100 TB scale path (same API, sketch-based, no exact-shuffle)."""
-    return edges.groupBy(key).agg(
-        F.countDistinct(counterparty).alias("n_counterparties")
-    )
-
-
 def time_bucketed_activity(df: DataFrame, ts: str, value: str, bucket: str = "hour") -> DataFrame:
     """Tumbling time-bucket aggregation over an event-time column."""
     return df.groupBy(F.date_trunc(bucket, F.col(ts)).alias("bucket")).agg(

@@ -168,22 +168,6 @@ def parse_wav(buf: bytes) -> tuple[dict, np.ndarray]:
     return meta, samples
 
 
-def fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in feature extractor: byte-histogram folded into
-    ``dim`` buckets, normalised. Lets the full pipeline (batch shapes, Arrow
-    round-trip, schema) be exercised and asserted without media libs.
-
-    Per-payload form, kept as the semantic spec; the batch path below
-    (:func:`_batch_features`) computes the same histogram for a whole Arrow
-    chunk in one ``bincount`` and is what the mapInPandas stages use.
-    """
-    if payload is None:
-        return [0.0] * dim
-    arr = np.frombuffer(payload, dtype=np.uint8) % dim
-    counts = np.bincount(arr, minlength=dim)
-    return (counts / max(1, len(payload))).tolist()
-
-
 def _batch_features(contents: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray]:
     """Whole-batch histogram: one pass, no per-row Python.
 

@@ -24,13 +24,6 @@ def filter_type_dispatch(df: DataFrame, type_col: str, type_value: str) -> DataF
     return df.filter(F.col(type_col) == type_value)
 
 
-def retention_filter(df: DataFrame, seq_col: str, high_water: Column, window: int) -> DataFrame:
-    """Keep-side of the reference's retention delete (follower.py:210-214):
-    ``seq >= high_water - window``. On a partitioned layout this prunes to a
-    metadata-only partition drop (SURVEY.md section 4)."""
-    return df.filter(F.col(seq_col) >= high_water - F.lit(window))
-
-
 def dedup_by_key(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
     """Deterministic keep-one-per-key dedup.
 
@@ -78,11 +71,3 @@ def enrichment_join(
 def drop_null_rows(df: DataFrame) -> DataFrame:
     """``data.dropna()`` equivalent (loaders.py:35): drop rows with any NULL."""
     return df.na.drop("any")
-
-
-def parse_trailing_height(df: DataFrame, filename_col: str, pattern: str = r"gateway_inventory_(\d+)\.csv\.gz") -> DataFrame:
-    """Filename -> height watermark (loaders.py:45 ``parse(...)``)."""
-    return df.withColumn(
-        "inventory_height",
-        F.regexp_extract(F.col(filename_col), pattern, 1).cast("long"),
-    )

@@ -13,13 +13,14 @@ BOTH engines so summation-order noise cannot flip the value hash.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.keys import canonical_md5_key
 from ..functions.geo import geo_index_udf
 from ..operators import aggregates as agg
 from ..operators import relational as rel
+from ..streaming.replay import _replay_dir, mod_slices, replay
 from .registry import EVENTS_NORM, load_events, load_table, register
 
 
@@ -783,72 +784,6 @@ def dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _replay_dir(name: str) -> str:
-    """Deterministic per-query scratch dir, wiped on entry.
-
-    The replay queries materialize sink tables; one well-known path per
-    (process, query) — instead of ``mkdtemp`` per call — keeps repeated
-    runs from leaking a directory per invocation (ADVICE r4), and the
-    wipe guarantees each run starts from an empty table so the value
-    hash is independent of run order. The path is keyed by PID because
-    a path shared ACROSS processes races: two concurrent Spark sessions
-    running the same replay (e.g. pytest alongside the driver replica)
-    both wipe/write ``.../<name>/_temporary/0`` and one aborts with
-    FileNotFoundException. Scratch roots left by exited processes are
-    swept opportunistically so the per-PID scheme cannot accumulate;
-    because a dead owner's PID can be recycled by an unrelated live
-    process (which would make the liveness probe keep the orphan
-    forever) — and because pre-PID-scheme legacy dirs are not
-    digit-named at all — entries ALSO age out by mtime after one day
-    (ADVICE r10). Liveness wins over age: a dir whose PID is alive and
-    probe-able is never swept, however old (its owner may still be
-    reading nested files the dir mtime doesn't reflect — review r11);
-    the age path reclaims only dirs whose owner is gone (dead PID),
-    un-probe-able (recycled PID now owned by another user), or unnamed
-    (legacy non-digit dirs).
-    """
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_replay")
-    stale_before = time.time() - 24 * 3600
-    try:
-        for entry in os.listdir(root):
-            path = os.path.join(root, entry)
-            if entry.isdigit() and int(entry) == os.getpid():
-                continue
-            try:
-                aged_out = os.path.getmtime(path) < stale_before
-            except OSError:
-                aged_out = False
-            if not entry.isdigit():
-                # legacy/unknown dir: no PID to probe — age is the only
-                # signal, so sweep once it's a day old, never sooner
-                if aged_out:
-                    shutil.rmtree(path, ignore_errors=True)
-                continue
-            try:
-                os.kill(int(entry), 0)  # raises if that PID is gone
-            except ProcessLookupError:
-                shutil.rmtree(path, ignore_errors=True)
-            except PermissionError:
-                # PID exists but isn't ours: the process is ALIVE, so
-                # the dir is never swept regardless of age (ADVICE r11:
-                # the old age-based reclaim here could remove a >24h
-                # other-user session's in-use scratch; a recycled PID
-                # whose dir truly is orphaned gets cleaned the next
-                # time that PID is unoccupied)
-                pass
-    except FileNotFoundError:
-        pass
-    d = os.path.join(root, str(os.getpid()), name)
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
 _FOLLOW_N = 120
 
 _FOLLOW_SQL = f"""WITH h AS (SELECT i.i AS h FROM generate_series(1, {_FOLLOW_N}) i(i)),
@@ -1078,7 +1013,7 @@ def rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The custom stateful operator (streaming/stateful.py "
         "running_totals, applyInPandasWithState) under the driver's "
         "value hash: events replay as three parquet micro-batches "
-        "(maxFilesPerTrigger=1, availableNow), per-user state carries "
+        "(maxFilesPerTrigger=1, available-now trigger), per-user state carries "
         "across batches, and each user's LAST update-mode emission must "
         "equal a one-shot GROUP BY over the whole table. Values are "
         "integer cents so state accumulation is exact; state lives in "
@@ -1097,50 +1032,17 @@ def stream_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("value"),
     )
-    src = _replay_dir("stream_totals/src")
-    res = _replay_dir("stream_totals/res")
-    ckpt = _replay_dir("stream_totals/ckpt")
     ev = ev.persist()  # one execution for all three batch slices
-    for i in range(3):
-        (
-            ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i)
-            .select("user_id", "value")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    ev.unpersist()
-    stream = (
-        spark.readStream.schema("user_id long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    slices = [s.select("user_id", "value") for s in mod_slices(ev, "event_id", 3)]
+    outs = replay(
+        spark, "stream_totals", [slices], running_totals,
+        mode="update", sink=None, key=["user_id"],
     )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            running_totals(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
-    return (
-        outs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "n_events_total",
-            F.col("total_value").cast("long").alias("total_value_c"),
-        )
+    ev.unpersist()
+    return outs.select(
+        "user_id",
+        "n_events_total",
+        F.col("total_value").cast("long").alias("total_value_c"),
     )
 
 

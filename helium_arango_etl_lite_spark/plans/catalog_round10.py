@@ -238,7 +238,7 @@ SELECT DISTINCT src, dst FROM ({" UNION ALL ".join(sels)})"""
         "llm_ann_index_append contract run through Structured "
         "Streaming: embeddings arrive in "
         f"{_INGEST_BATCHES} micro-batches (vec_id % {_INGEST_BATCHES}, "
-        "one file per trigger, availableNow), and each batch's "
+        "one file per trigger, available-now trigger), and each batch's "
         "foreachBatch (1) appends its vectors to the corpus state "
         "table, (2) computes the batch's bucketed top-k out-edges "
         "against the corpus SO FAR (same pinned planes, the asymmetric "
@@ -258,43 +258,16 @@ SELECT DISTINCT src, dst FROM ({" UNION ALL ".join(sels)})"""
     tags=("streaming", "similarity", "graph", "state", "scale"),
 )
 def stream_ann_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from ..operators.llm.similarity import knn_join_bucketed
-    from .catalog_core import _replay_dir
+    from ..streaming.replay import _replay_dir, mod_slices, replay
     from .catalog_llm import EMB_DIM, NEAR_DUP_PLANES
 
-    src = _replay_dir("stream_ann/src")
     corpus = _replay_dir("stream_ann/corpus")
-    res = _replay_dir("stream_ann/res")
-    ckpt = _replay_dir("stream_ann/ckpt")
-
-    tbl = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    pdf = tbl.to_pandas()
-    schema = pa.schema(
-        [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float64()))]
-    )
-    for b in range(_INGEST_BATCHES):
-        part = pdf[pdf["vec_id"] % _INGEST_BATCHES == b]
-        path = os.path.join(src, f"b{b}.parquet")
-        pq.write_table(
-            pa.Table.from_pandas(part, schema=schema, preserve_index=False),
-            path,
-        )
-        os.utime(path, (1_000_000 + b, 1_000_000 + b))
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
 
-    def sink(df: DataFrame, bid: int) -> None:
+    def sink(df: DataFrame, bid: int, res: str) -> None:
         df.write.mode("append").parquet(corpus)
         full = spark.read.parquet(corpus)
         per = [
@@ -312,18 +285,11 @@ def stream_ann_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.unionByName(back).write.mode("append").parquet(res)
 
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(res).distinct()
+    outs = replay(
+        spark, "stream_ann", [mod_slices(emb, "vec_id", _INGEST_BATCHES)],
+        lambda stream: stream, mode="append", sink=sink, key=None,
+    )
+    return outs.distinct()
 
 
 # ---------------------------------------------------------------------------

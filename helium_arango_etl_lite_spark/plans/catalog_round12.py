@@ -27,7 +27,7 @@ selection, and adjudication — done in-place, not operators).
   verdict item 8): ``llm_heavy_hitters_cms``'s docstring claims the
   sketch is "mergeable cell-wise across executors/micro-batches"; this
   entry uses that literally. Token-occurrence cell increments replay as
-  three parquet micro-batches through ``applyInPandasWithState``
+  three parquet micro-batches through a built-in streaming ``sum``
   grouped BY CELL — the state store holds exactly the depth*width
   sketch cells (bounded regardless of stream volume; an exact streaming
   top-k would hold the whole Zipf-tailed vocabulary). The latest
@@ -56,10 +56,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog_core import _replay_dir
+from ..streaming.replay import _replay_dir, mod_slices, replay
 from .catalog_llm import EMB_DIM, IVF_K
 from .catalog_round5 import (
     _adc_lut_sql, _CMS_D, _CMS_K, _CMS_SQL, _CMS_W, _pq_block_sql,
@@ -264,7 +264,7 @@ def llm_ann_ivf_pq_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hash32 buckets as the batch sketch — shared cms_token_buckets) "
         "are MAP-SIDE COMBINED to per-cell partial counts before the "
         "state store (exact — CMS cells are additive), so the shuffle "
-        "into applyInPandasWithState and the Arrow transfer are both "
+        "into the built-in streaming sum is "
         f"bounded at {_CMS_D}x{_CMS_W} rows per batch regardless of "
         "token volume, and the state store holds exactly the sketch "
         "cells — the CMS's cell-wise mergeability used literally (an "
@@ -284,54 +284,23 @@ def stream_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import cms_cells_stream
 
     docs = load_table(spark, sf_dir, "documents")
-    src = _replay_dir("stream_cms/src")
-    res = _replay_dir("stream_cms/res")
-    ckpt = _replay_dir("stream_cms/ckpt")
-    for i in range(3):
-        batch = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i)
-        (
-            cms_cell_increments(
-                cms_token_buckets(batch, depth=_CMS_D, width=_CMS_W),
-                depth=_CMS_D,
-            )
-            # map-side combine BEFORE the state store: each batch ships
-            # <= depth*width pre-summed cells instead of one row per
-            # token occurrence (exact — CMS cells are additive)
-            .groupBy(F.col("d").cast("int").alias("d"),
-                     F.col("b").cast("int").alias("b"))
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
+    slices = [
+        cms_cell_increments(
+            cms_token_buckets(batch, depth=_CMS_D, width=_CMS_W),
+            depth=_CMS_D,
         )
-    stream = (
-        spark.readStream.schema("d int, b int, c long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            cms_cells_stream(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    w = Window.partitionBy("d", "b").orderBy(F.desc("batch_id"))
-    cells = (
-        outs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("d", "b", F.col("c").cast("long").alias("c"))
-    )
+        # map-side combine BEFORE the state store: each batch ships
+        # <= depth*width pre-summed cells instead of one row per
+        # token occurrence (exact — CMS cells are additive)
+        .groupBy(F.col("d").cast("int").alias("d"),
+                 F.col("b").cast("int").alias("b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        for batch in mod_slices(docs, "doc_id", 3)
+    ]
+    cells = replay(
+        spark, "stream_cms", [slices], cms_cells_stream,
+        mode="update", sink=None, key=["d", "b"],
+    ).select("d", "b", F.col("c").cast("long").alias("c"))
     tb = cms_token_buckets(docs, depth=_CMS_D, width=_CMS_W).localCheckpoint(
         eager=False
     )
@@ -380,53 +349,19 @@ def stream_session_ooo_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    src = _replay_dir("stream_sess_ooo/src")
-    res = _replay_dir("stream_sess_ooo/res")
-    ckpt = _replay_dir("stream_sess_ooo/ckpt")
     base = base.persist()  # one execution for all three batch slices
-    for i in range(3):
-        (
-            base.filter(F.pmod(F.col("event_id"), F.lit(3)) == i)
-            .select("user_id", "ts_us", "value_c")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    base.unpersist()
-    stream = (
-        spark.readStream.schema("user_id long, ts_us long, value_c long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    slices = [s.drop("event_id") for s in mod_slices(base, "event_id", 3)]
+    # every row of each user's last emission batch: the whole session list
+    outs = replay(
+        spark, "stream_sess_ooo", [slices], sessionize_ooo,
+        mode="update", sink=None, key=["user_id"],
     )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            sessionize_ooo(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    last_b = outs.groupBy("user_id").agg(F.max("batch_id").alias("mb"))
-    return (
-        outs.join(last_b, "user_id")
-        .filter(F.col("batch_id") == F.col("mb"))
-        .select(
-            "user_id",
-            F.timestamp_micros(F.col("session_start_us")).alias(
-                "session_start"
-            ),
-            "n_events",
-            F.col("total_value_c").alias("total_cents"),
-        )
+    base.unpersist()
+    return outs.select(
+        "user_id",
+        F.timestamp_micros(F.col("session_start_us")).alias("session_start"),
+        "n_events",
+        F.col("total_value_c").alias("total_cents"),
     )
 
 

@@ -17,7 +17,7 @@ path + the batch=stream quantile sketch (r12 verdict items 2 and 5).
   probe policy fails the suite, not just drifts a number.
 
 * ``stream_quantiles_replay`` — the mergeable 128-bin histogram sketch
-  (``agg_histogram_quantiles``) maintained in ``applyInPandasWithState``
+  (``agg_histogram_quantiles``) maintained in built-in streaming ``sum``
   per-bin state across three micro-batches (r12 verdict item 5): the
   CMS heavy-hitters pattern (catalog_round12) applied to quantiles —
   bin increments are MAP-SIDE COMBINED before the state store so the
@@ -62,7 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog_core import _replay_dir
+from ..streaming.replay import mod_slices, replay
 from .catalog_llm import EMB_DIM, IVF_K
 from .catalog_round5 import (
     _adc_lut_sql, _pq_block_sql, _PQ_BLOCKS, _PQ_CODES,
@@ -178,7 +178,7 @@ def llm_ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     _HQ_SQL,
     doc="Streaming quantile sketch (r12 verdict item 5): the mergeable "
         f"{_HQ_BINS}-bin histogram of agg_histogram_quantiles maintained "
-        "in applyInPandasWithState per-bin state across three parquet "
+        "in built-in streaming-sum per-bin state across three parquet "
         "micro-batches (l_orderkey % 3). A fixed-edge histogram IS a "
         "depth-1 Count-Min Sketch whose 'hash' is the bin function, so "
         "the stream reuses cms_cells_stream literally (d=0, b=bin) — "
@@ -211,58 +211,28 @@ def stream_quantiles_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n"),
     ).localCheckpoint(eager=True)
 
-    src = _replay_dir("stream_hq/src")
-    res = _replay_dir("stream_hq/res")
-    ckpt = _replay_dir("stream_hq/ckpt")
     binned = li.crossJoin(F.broadcast(st)).withColumn(
         "bin", F.expr(f"((pc - minc) * {_HQ_BINS}) div (maxc - minc + 1)")
     ).persist()  # one execution for all three batch slices
-    for i in range(3):
-        (
-            binned.filter(F.pmod(F.col("l_orderkey"), F.lit(3)) == i)
-            # map-side combine BEFORE the state store: each batch ships
-            # <= _HQ_BINS pre-summed bin counts, never one row per line
-            .groupBy(
-                F.lit(0).cast("int").alias("d"),
-                F.col("bin").cast("int").alias("b"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
+    slices = [
+        batch
+        # map-side combine BEFORE the state store: each batch ships
+        # <= _HQ_BINS pre-summed bin counts, never one row per line
+        .groupBy(
+            F.lit(0).cast("int").alias("d"),
+            F.col("bin").cast("int").alias("b"),
         )
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        for batch in mod_slices(binned, "l_orderkey", 3)
+    ]
+    bins = replay(
+        spark, "stream_hq", [slices], cms_cells_stream,
+        mode="update", sink=None, key=["d", "b"],
+    ).select(
+        F.col("b").cast("long").alias("bin"),
+        F.col("c").cast("long").alias("cnt"),
+    )
     binned.unpersist()
-    stream = (
-        spark.readStream.schema("d int, b int, c long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            cms_cells_stream(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    last = Window.partitionBy("d", "b").orderBy(F.desc("batch_id"))
-    bins = (
-        outs.withColumn("rn", F.row_number().over(last))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("b").cast("long").alias("bin"),
-            F.col("c").cast("long").alias("cnt"),
-        )
-    )
     # bounded readout: <= _HQ_BINS rows ever enter this window
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     cum = bins.crossJoin(F.broadcast(st)).withColumn(
@@ -303,7 +273,7 @@ def _hll_replay_sql() -> str:
     _hll_replay_sql(),
     doc="Streaming HyperLogLog distinct counts: the from-first-"
         "principles m=64 HLL of agg_hll_distinct maintained in "
-        "applyInPandasWithState per-REGISTER state across three parquet "
+        "built-in streaming-max per-REGISTER state across three parquet "
         "micro-batches (event_id % 3). This extends the batch=stream "
         "sketch family along a new axis: CMS cells and histogram bins "
         "merge by SUM; HLL registers merge by MAX — idempotent and "
@@ -327,55 +297,21 @@ def stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .registry import load_events
 
     en = load_events(spark, sf_dir)
-    src = _replay_dir("stream_hll/src")
-    res = _replay_dir("stream_hll/res")
-    ckpt = _replay_dir("stream_hll/ckpt")
-    for i in range(3):
-        (
-            # map-side combine BEFORE the state store: each batch ships
-            # <= groups x m partial register maxima, never one row per
-            # event (max-merge makes the pre-reduction exact)
-            hll_registers(
-                en.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),
-                group="event_type", value="user_id",
-            )
-            .select(
-                F.col("event_type").alias("g"),
-                F.col("b").cast("long").alias("b"),
-                F.col("r").cast("long").alias("r"),
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
+    slices = [
+        # map-side combine BEFORE the state store: each batch ships
+        # <= groups x m partial register maxima, never one row per
+        # event (max-merge makes the pre-reduction exact)
+        hll_registers(batch, group="event_type", value="user_id").select(
+            F.col("event_type").alias("g"),
+            F.col("b").cast("long").alias("b"),
+            F.col("r").cast("long").alias("r"),
         )
-    stream = (
-        spark.readStream.schema("g string, b long, r long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            hll_registers_stream(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    last = Window.partitionBy("g", "b").orderBy(F.desc("batch_id"))
-    regs = (
-        outs.withColumn("rn", F.row_number().over(last))
-        .filter(F.col("rn") == 1)
-        .select(F.col("g").alias("event_type"), "b", "r")
-    )
+        for batch in mod_slices(en, "event_id", 3)
+    ]
+    regs = replay(
+        spark, "stream_hll", [slices], hll_registers_stream,
+        mode="update", sink=None, key=["g", "b"],
+    ).select(F.col("g").alias("event_type"), "b", "r")
     return hll_estimate(regs, en, group="event_type", value="user_id")
 
 

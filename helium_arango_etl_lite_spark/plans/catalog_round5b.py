@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.llm import similarity
-from .catalog_core import _replay_dir
+from ..streaming.replay import mod_slices, replay
 from .catalog_llm import EMB_DIM, LSH_SEED, NEAR_DUP_PLANES
 from .registry import EVENTS_NORM, load_events, load_table, register
 
@@ -221,18 +221,13 @@ FROM kept GROUP BY 1"""
         "is bounded by the delay horizon, so executor memory tracks the "
         "watermark window, never the stream length — the property that "
         "makes this run on an unbounded stream at cluster scale. (The "
-        "REPLAY HARNESS collects the test-scale table driver-side to "
-        "stamp deterministically-ordered batch files — that is the "
-        "fixture construction, not the operator: a production stream "
-        "arrives already batched by the source.)",
+        "REPLAY HARNESS writes the test-scale table as deterministically-"
+        "ordered batch files — that is the fixture construction, not "
+        "the operator: a production stream arrives already batched by "
+        "the source.)",
     tags=("streaming", "watermark", "agg"),
 )
 def stream_late_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     ev = load_events(spark, sf_dir).select(
         "event_id",
         "ts",
@@ -240,75 +235,29 @@ def stream_late_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("value_c"),
     )
-    src = _replay_dir("stream_late/src")
-    res = _replay_dir("stream_late/res")
-    ckpt = _replay_dir("stream_late/ckpt")
-
-    # One parquet file per micro-batch, written with pyarrow so the file
-    # NAME and MTIME are ours: the file stream source orders batches by
-    # (mtime, path), so both orderings agree on b0 < b1 < b2 and the
-    # watermark progression is deterministic run-to-run.
     # one execution for all three mod-slices (see catalog_round8)
     ev = ev.persist()
-    for i in range(_WM_BATCHES):
-        pdf = (
-            ev.filter(F.pmod(F.col("event_id"), F.lit(_WM_BATCHES)) == i)
-            .select("ts", "value_c")
-            .toPandas()
-        )
-        # micros + UTC so Spark reads TimestampType (TIMESTAMP(NANOS)
-        # would come back as a bare INT64 — SPARK-40819)
-        pdf["ts"] = pdf["ts"].dt.tz_localize("UTC").astype("datetime64[us, UTC]")
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
-    ev.unpersist()
+    slices = [
+        s.select("ts", "value_c") for s in mod_slices(ev, "event_id", _WM_BATCHES)
+    ]
 
-    stream = (
-        spark.readStream.schema("ts timestamp, value_c long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    agg = (
-        stream.withWatermark("ts", _WM_DELAY)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum("value_c").cast("long").alias("sum_value_c"),
-        )
-    )
-
-    def sink(df: DataFrame, bid: int) -> None:
-        (
-            df.select(
-                F.col("w.start").alias("window_start"),
-                "n_events",
-                "sum_value_c",
-                F.lit(bid).alias("batch_id"),
+    def windowed(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", _WM_DELAY)
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(
+                F.count("*").cast("long").alias("n_events"),
+                F.sum("value_c").cast("long").alias("sum_value_c"),
             )
-            .write.mode("append")
-            .parquet(res)
+            .select(F.col("w.start").alias("window_start"), "n_events", "sum_value_c")
         )
 
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            agg.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    outs = spark.read.parquet(res)
-    w = Window.partitionBy("window_start").orderBy(F.desc("batch_id"))
-    return (
-        outs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("window_start", "n_events", "sum_value_c")
+    outs = replay(
+        spark, "stream_late", [slices], windowed,
+        mode="update", sink=None, key=["window_start"],
     )
+    ev.unpersist()
+    return outs.select("window_start", "n_events", "sum_value_c")
 
 
 # ---------------------------------------------------------------------------
@@ -448,36 +397,21 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "state"),
 )
 def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_events(spark, sf_dir).select("user_id", "event_type", "ts")
-    src = _replay_dir("stream_dedup/src")
-    res = _replay_dir("stream_dedup/res")
-    ckpt = _replay_dir("stream_dedup/ckpt")
-    ev.repartition(3).write.mode("append").parquet(src)
+    ev = load_events(spark, sf_dir).select("event_id", "user_id", "event_type", "ts")
+    slices = [s.drop("event_id") for s in mod_slices(ev, "event_id", 3)]
 
-    stream = (
-        spark.readStream.schema("user_id long, event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    deduped = stream.withWatermark("ts", "40 days").dropDuplicatesWithinWatermark(
-        ["user_id", "event_type"]
-    )
-
-    def sink(df: DataFrame, bid: int) -> None:
-        df.select("user_id", "event_type").write.mode("append").parquet(res)
-
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            deduped.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def deduped(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "40 days")
+            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+            .select("user_id", "event_type")
         )
-        q.awaitTermination()
-    return spark.read.parquet(res).select("user_id", "event_type")
+
+    outs = replay(
+        spark, "stream_dedup", [slices], deduped,
+        mode="append", sink=None, key=None,
+    )
+    return outs.select("user_id", "event_type")
 
 
 @register(
@@ -503,55 +437,32 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "state"),
 )
 def stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", F.col("o_orderdate").cast("timestamp").alias("o_orderdate")
+    )
     items = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_shipdate"
+        "l_orderkey", "l_linenumber",
+        F.col("l_shipdate").cast("timestamp").alias("l_shipdate"),
     )
-    osrc = _replay_dir("stream_join/orders")
-    lsrc = _replay_dir("stream_join/lineitem")
-    res = _replay_dir("stream_join/res")
-    ckpt = _replay_dir("stream_join/ckpt")
-    orders.repartition(3).write.mode("append").parquet(osrc)
-    items.repartition(3).write.mode("append").parquet(lsrc)
 
-    so = (
-        spark.readStream.schema("o_orderkey long, o_orderdate timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(osrc)
-        .withWatermark("o_orderdate", "3000 days")
+    def joined(so: DataFrame, sl: DataFrame) -> DataFrame:
+        so = so.withWatermark("o_orderdate", "3000 days")
+        sl = sl.withWatermark("l_shipdate", "3000 days")
+        return sl.join(
+            so,
+            F.expr(
+                "l_orderkey = o_orderkey AND "
+                "l_shipdate >= o_orderdate AND "
+                "l_shipdate < o_orderdate + INTERVAL 180 DAYS"
+            ),
+        ).select("l_orderkey", "l_linenumber", "o_orderdate", "l_shipdate")
+
+    outs = replay(
+        spark, "stream_join",
+        [mod_slices(orders, "o_orderkey", 3), mod_slices(items, "l_orderkey", 3)],
+        joined, mode="append", sink=None, key=None,
     )
-    sl = (
-        spark.readStream.schema(
-            "l_orderkey long, l_linenumber int, l_shipdate timestamp"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(lsrc)
-        .withWatermark("l_shipdate", "3000 days")
-    )
-    joined = sl.join(
-        so,
-        F.expr(
-            "l_orderkey = o_orderkey AND "
-            "l_shipdate >= o_orderdate AND "
-            "l_shipdate < o_orderdate + INTERVAL 180 DAYS"
-        ),
-    ).select("l_orderkey", "l_linenumber", "o_orderdate", "l_shipdate")
-
-    def sink(df: DataFrame, bid: int) -> None:
-        df.write.mode("append").parquet(res)
-
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(osrc, lsrc)):
-        q = (
-            joined.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(res)
+    return outs.select("l_orderkey", "l_linenumber", "o_orderdate", "l_shipdate")
 
 
 # ---------------------------------------------------------------------------

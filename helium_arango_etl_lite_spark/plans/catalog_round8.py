@@ -773,9 +773,9 @@ def events_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The CUSUM monitor as a STREAMING stateful operator, hash-"
         "verified against the batch identity: per-user mean_c is "
         "calibrated batch-side (the history table), events replay as "
-        "three EVENT-TIME-split micro-batches (pyarrow files with "
-        "controlled names+mtimes so the file source's (mtime, path) "
-        "order is the time order), and applyInPandasWithState runs the "
+        "three EVENT-TIME-split micro-batches (one file each with a "
+        "controlled mtime so the file source's mtime order is the "
+        "time order), and applyInPandasWithState runs the "
         "literal Page recursion s = max(0, s + dev) with five integers "
         "of state per user — O(keys) forever, no timeline retained. "
         "The oracle is the SAME SQL as events_cusum_alarm: the "
@@ -786,12 +786,7 @@ def events_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "temporal"),
 )
 def stream_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .catalog_core import _replay_dir
+    from ..streaming.replay import replay, time_slices
     from ..streaming.stateful import cusum_monitor
 
     ev = load_events(spark, sf_dir)
@@ -808,68 +803,21 @@ def stream_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("xc").over(w_all) / F.count(F.lit(1)).over(w_all)
         ).cast("long"),
     )
-
-    src = _replay_dir("stream_cusum/src")
-    res = _replay_dir("stream_cusum/res")
-    ckpt = _replay_dir("stream_cusum/ckpt")
     # One execution of the windowed calibration plan: the min/max pass and
     # the three batch slices all read the cache instead of recomputing the
     # full-table window 4x (guide §1.2 "don't compute things you throw
-    # away"); released before the stream starts.
+    # away").
     cal = cal.persist()
-    lo, hi = cal.agg(
-        F.min("ts_us"), F.max("ts_us")
-    ).collect()[0]
-    c1 = lo + (hi - lo) // 3
-    c2 = lo + 2 * (hi - lo) // 3
-    for i, cond in enumerate(
-        [
-            F.col("ts_us") < c1,
-            (F.col("ts_us") >= c1) & (F.col("ts_us") < c2),
-            F.col("ts_us") >= c2,
-        ]
-    ):
-        pdf = cal.filter(cond).toPandas()
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
-    cal.unpersist()
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts_us long, event_id long, xc long, mean_c long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    outs = replay(
+        spark, "stream_cusum", [time_slices(cal, "ts_us")],
+        lambda stream: cusum_monitor(stream, _CUSUM_MULT, _CUSUM_H),
+        mode="update", sink=None, key=["user_id"],
     )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            cusum_monitor(stream, _CUSUM_MULT, _CUSUM_H)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
-    return (
-        outs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("n_events").cast("long").alias("n_events"),
-            F.col("n_alarms").cast("long").alias("n_alarms"),
-            F.col("max_cusum").cast("long").alias("max_cusum"),
-            F.timestamp_micros(F.col("first_alarm_us")).alias(
-                "first_alarm_ts"
-            ),
-        )
+    cal.unpersist()
+    return outs.select(
+        "user_id",
+        F.col("n_events").cast("long").alias("n_events"),
+        F.col("n_alarms").cast("long").alias("n_alarms"),
+        F.col("max_cusum").cast("long").alias("max_cusum"),
+        F.timestamp_micros(F.col("first_alarm_us")).alias("first_alarm_ts"),
     )

@@ -517,13 +517,8 @@ FROM y GROUP BY user_id, sid"""
     tags=("streaming", "stateful", "temporal"),
 )
 def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    from ..streaming.replay import replay, time_slices
     from ..streaming.stateful import sessionize
-    from .catalog_core import _replay_dir
 
     ev = load_events(spark, sf_dir)
     base = ev.select(
@@ -532,64 +527,17 @@ def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.round(F.col("value") * 100).cast("long").alias("xc"),
     )
-
-    src = _replay_dir("stream_session/src")
-    res = _replay_dir("stream_session/res")
-    ckpt = _replay_dir("stream_session/ckpt")
     # one execution for min/max + all three slices (see catalog_round8)
     base = base.persist()
-    lo, hi = base.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
-    c1 = lo + (hi - lo) // 3
-    c2 = lo + 2 * (hi - lo) // 3
-    for i, cond in enumerate(
-        [
-            F.col("ts_us") < c1,
-            (F.col("ts_us") >= c1) & (F.col("ts_us") < c2),
-            F.col("ts_us") >= c2,
-        ]
-    ):
-        pdf = base.filter(cond).toPandas()
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
+    outs = replay(
+        spark, "stream_session", [time_slices(base, "ts_us")],
+        lambda stream: sessionize(stream, _SESS_GAP_US),
+        mode="update", sink=None, key=["user_id", "session_start_us"],
+    )
     base.unpersist()
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts_us long, event_id long, xc long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            sessionize(stream, _SESS_GAP_US)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    w = Window.partitionBy("user_id", "session_start_us").orderBy(
-        F.desc("batch_id")
-    )
-    return (
-        outs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.timestamp_micros(F.col("session_start_us")).alias(
-                "session_start"
-            ),
-            F.col("n_events").cast("long").alias("n_events"),
-            F.col("total_cents").cast("long").alias("total_cents"),
-        )
+    return outs.select(
+        "user_id",
+        F.timestamp_micros(F.col("session_start_us")).alias("session_start"),
+        F.col("n_events").cast("long").alias("n_events"),
+        F.col("total_cents").cast("long").alias("total_cents"),
     )

@@ -346,13 +346,8 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "etl"),
 )
 def stream_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    from ..streaming.replay import replay, time_slices
     from ..streaming.stateful import scd2_stream
-    from .catalog_core import _replay_dir
 
     ev = load_events(spark, sf_dir)
     base = ev.select(
@@ -361,65 +356,20 @@ def stream_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.col("event_type").alias("attr"),
     )
-
-    src = _replay_dir("stream_scd2/src")
-    res = _replay_dir("stream_scd2/res")
-    ckpt = _replay_dir("stream_scd2/ckpt")
     # one execution for min/max + all three slices (see catalog_round8)
     base = base.persist()
-    lo, hi = base.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
-    c1 = lo + (hi - lo) // 3
-    c2 = lo + 2 * (hi - lo) // 3
-    for i, cond in enumerate(
-        [
-            F.col("ts_us") < c1,
-            (F.col("ts_us") >= c1) & (F.col("ts_us") < c2),
-            F.col("ts_us") >= c2,
-        ]
-    ):
-        pdf = base.filter(cond).toPandas()
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
+    outs = replay(
+        spark, "stream_scd2", [time_slices(base, "ts_us")], scd2_stream,
+        mode="update", sink=None, key=["user_id", "version"],
+    )
     base.unpersist()
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts_us long, event_id long, attr string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            scd2_stream(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    w = Window.partitionBy("user_id", "version").orderBy(F.desc("batch_id"))
-    return (
-        outs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "attr",
-            F.timestamp_micros(F.col("valid_from_us")).alias("valid_from"),
-            F.timestamp_micros(F.col("valid_to_us")).alias("valid_to"),
-            F.col("version").cast("long").alias("version"),
-        )
-        .withColumn("is_current", F.col("valid_to").isNull())
-    )
+    return outs.select(
+        "user_id",
+        "attr",
+        F.timestamp_micros(F.col("valid_from_us")).alias("valid_from"),
+        F.timestamp_micros(F.col("valid_to_us")).alias("valid_to"),
+        F.col("version").cast("long").alias("version"),
+    ).withColumn("is_current", F.col("valid_to").isNull())
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,7 @@ distinct bucket list (a handful of longs).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -117,10 +118,17 @@ def follow(
     return writer.start()
 
 
+# read errors that mean "this table has not been written yet"
+_NOT_CREATED = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def sync_state(spark: SparkSession, out_dir: str) -> dict[str, int | None]:
     """Engine analog of the ``follower_info`` doc read-back
     (follower.py:100-103) and the chain-tip probe (client.py:21-23): max
-    synced block per edge table, from the sink itself."""
+    synced block per edge table, from the sink itself. A table that does
+    not exist yet, or holds no data file yet because its first write is
+    still in flight, has synced nothing (``None``); any other read
+    failure raises."""
     state: dict[str, int | None] = {}
     for table in (PAYMENTS, RECEIPTS):
         try:
@@ -130,6 +138,8 @@ def sync_state(spark: SparkSession, out_dir: str) -> dict[str, int | None]:
                 .collect()[0]
             )
             state[table] = row["h"]
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() not in _NOT_CREATED:
+                raise
             state[table] = None
     return state

@@ -20,18 +20,15 @@ Measured on this host with bench.py's fixed calib_state job (150k rows,
 The partition count must therefore be derived from the DATA, not from the
 core count (too big for small streams) and not from a constant (too small
 at 100 TB). :func:`stream_partitions` sizes partitions so each holds
-about ``target_bytes`` of source input per full replay:
+about ``TARGET_MB`` of source input per full replay:
 
 * at bench scale (a few MB of micro-batches) it gives the floor — state
   I/O stops dominating;
 * at production scale (GBs per batch) it grows linearly with input, i.e.
-  exactly what you would hand-tune on a cluster;
-* ``SPARK_GRAFT_STREAM_TARGET_MB`` / ``SPARK_GRAFT_STREAM_MIN_PARTS`` /
-  ``SPARK_GRAFT_STREAM_MAX_PARTS`` override the knobs per deployment
-  without touching code.
+  exactly what you would hand-tune on a cluster, up to a cap.
 
 :func:`stream_shuffle_partitions` scopes the setting to one stream: the
-conf is set before ``start()`` and restored after ``awaitTermination()``,
+conf is set before ``start()`` and restored after the stream ends,
 so the surrounding batch plans keep the session's normal parallelism.
 """
 
@@ -54,9 +51,9 @@ from pyspark.sql import SparkSession
 # 7.4 -> 5.9) while the JVM calib_state job pays only +0.2 s for 8 vs 4
 # — parallelism for the Python worker is worth more than the extra
 # per-partition commits.
-_TARGET_MB_DEFAULT = 32
-_MIN_PARTS_DEFAULT = 8
-_MAX_PARTS_DEFAULT = 4096
+TARGET_MB = 32
+MIN_PARTS = 8
+MAX_PARTS = 4096
 
 
 def _dir_bytes(path: str) -> int:
@@ -67,9 +64,7 @@ def _dir_bytes(path: str) -> int:
     s3://... / hdfs://... URI this local-only walk cannot measure) is
     WARNED about rather than silently sized 0 — sizing it 0 would make
     :func:`stream_partitions` return the floor and under-partition a
-    large production stream with no trace (ADVICE r13). Remote sources
-    should be measured via the Hadoop FileSystem API by the caller and
-    passed through the env overrides instead."""
+    large production stream with no trace (ADVICE r13)."""
     if not os.path.isdir(path):
         import warnings
 
@@ -94,18 +89,9 @@ def _dir_bytes(path: str) -> int:
 def stream_partitions(*src_dirs: str) -> int:
     """Derive the stateful-shuffle partition count from the total size of
     the stream's source directories (see module docstring)."""
-    target_mb = int(
-        os.environ.get("SPARK_GRAFT_STREAM_TARGET_MB", _TARGET_MB_DEFAULT)
-    )
-    floor = int(
-        os.environ.get("SPARK_GRAFT_STREAM_MIN_PARTS", _MIN_PARTS_DEFAULT)
-    )
-    cap = int(
-        os.environ.get("SPARK_GRAFT_STREAM_MAX_PARTS", _MAX_PARTS_DEFAULT)
-    )
     total = sum(_dir_bytes(d) for d in src_dirs)
-    want = -(-total // (target_mb * (1 << 20)))  # ceil
-    return max(floor, min(cap, int(want)))
+    want = -(-total // (TARGET_MB * (1 << 20)))  # ceil
+    return max(MIN_PARTS, min(MAX_PARTS, int(want)))
 
 
 @contextmanager
@@ -115,7 +101,7 @@ def stream_shuffle_partitions(
     """Scope ``spark.sql.shuffle.partitions`` to one streaming run.
 
     Set BEFORE ``start()`` (the first micro-batch pins state
-    partitioning from it) and restored AFTER ``awaitTermination()``
+    partitioning from it) and restored AFTER the stream terminates
     (micro-batches are planned while awaiting, so restoring earlier
     would race the stream's own planning).
 

@@ -237,6 +237,25 @@ def test_idempotent_append_antijoin(spark, tmp_path):
     assert got == ["k1", "k2", "k3"]
 
 
+def test_sync_state_missing_table_is_none(spark, tmp_path):
+    """Tables the follower has not created yet have synced nothing."""
+    got = sync_state(spark, str(tmp_path / "never_written"))
+    assert got == {"payments": None, "poc_receipts": None}
+    # a first write still in flight: the dir exists, no data file yet
+    (tmp_path / "in_flight" / "payments" / "_temporary").mkdir(parents=True)
+    got = sync_state(spark, str(tmp_path / "in_flight"))
+    assert got == {"payments": None, "poc_receipts": None}
+
+
+def test_sync_state_unreadable_table_raises(spark, tmp_path):
+    """A table that exists but cannot be read is an error, not "no data"."""
+    table = tmp_path / "out" / "payments"
+    table.mkdir(parents=True)
+    (table / "part-00000.parquet").write_text("not a parquet file")
+    with pytest.raises(Exception):
+        sync_state(spark, str(tmp_path / "out"))
+
+
 def test_gateway_inventory_source(spark, tmp_path):
     inv_dir = tmp_path / "inv"
     inv_dir.mkdir()

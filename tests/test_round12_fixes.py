@@ -111,10 +111,10 @@ def test_scratch_sweep_never_removes_alive_foreign_pid(monkeypatch, tmp_path):
     which could delete another user's in-use scratch mid-run)."""
     import tempfile
 
-    import helium_arango_etl_lite_spark.plans.catalog_core as cc
+    import helium_arango_etl_lite_spark.streaming.replay as rp
 
     # _replay_dir imports os/tempfile locally — patch the shared module
-    # objects, not attributes on catalog_core
+    # objects, not attributes on streaming.replay
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     root = tmp_path / "spark_graft_replay"
     foreign = root / "424242"
@@ -132,7 +132,7 @@ def test_scratch_sweep_never_removes_alive_foreign_pid(monkeypatch, tmp_path):
         return real_kill(pid, sig)
 
     monkeypatch.setattr(os, "kill", fake_kill)
-    d = cc._replay_dir("round12_fix_test")
+    d = rp._replay_dir("round12_fix_test")
     assert os.path.isdir(d)
     assert (foreign / "data").exists(), "alive foreign PID dir was swept"
 
@@ -149,6 +149,6 @@ def test_scratch_sweep_never_removes_alive_foreign_pid(monkeypatch, tmp_path):
         return real_kill(pid, sig)
 
     monkeypatch.setattr(os, "kill", fake_kill2)
-    cc._replay_dir("round12_fix_test")
+    rp._replay_dir("round12_fix_test")
     assert not dead.exists(), "dead PID dir should be reclaimed"
     assert (foreign / "data").exists()

@@ -5,40 +5,43 @@ import os
 import pytest
 
 from helium_arango_etl_lite_spark.streaming.tuning import (
+    MAX_PARTS,
+    MIN_PARTS,
+    TARGET_MB,
     stream_partitions,
     stream_shuffle_partitions,
 )
 
+MB = 1 << 20
+
 
 def _mkfile(path, n):
+    """A sparse file of ``n`` bytes: sized like real input, costs no disk."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "wb") as f:
-        f.write(b"\0" * n)
+        f.truncate(n)
 
 
 def test_floor_for_tiny_sources(tmp_path):
     _mkfile(str(tmp_path / "src" / "b0.parquet"), 1024)
-    assert stream_partitions(str(tmp_path / "src")) == 8
+    assert stream_partitions(str(tmp_path / "src")) == MIN_PARTS == 8
 
 
-def test_scales_linearly_with_bytes(tmp_path, monkeypatch):
-    # 1 MB target so the test doesn't write gigabytes: 10 MB -> 10 parts
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TARGET_MB", "1")
-    _mkfile(str(tmp_path / "a" / "x"), 10 * (1 << 20))
+def test_scales_linearly_with_bytes(tmp_path):
+    assert TARGET_MB == 32
+    _mkfile(str(tmp_path / "a" / "x"), 10 * TARGET_MB * MB)
     assert stream_partitions(str(tmp_path / "a")) == 10
     # multiple source dirs sum (the stream-stream join case)
-    _mkfile(str(tmp_path / "b" / "y"), 6 * (1 << 20))
+    _mkfile(str(tmp_path / "b" / "y"), 6 * TARGET_MB * MB)
     assert stream_partitions(str(tmp_path / "a"), str(tmp_path / "b")) == 16
+    # a partial target's worth of bytes still needs its own partition
+    _mkfile(str(tmp_path / "b" / "z"), 1)
+    assert stream_partitions(str(tmp_path / "a"), str(tmp_path / "b")) == 17
 
 
-def test_cap_and_floor_env_overrides(tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_TARGET_MB", "1")
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_MAX_PARTS", "8")
-    _mkfile(str(tmp_path / "a" / "x"), 100 * (1 << 20))
-    assert stream_partitions(str(tmp_path / "a")) == 8
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_MIN_PARTS", "16")
-    _mkfile(str(tmp_path / "c" / "z"), 1)
-    assert stream_partitions(str(tmp_path / "c")) == 16
+def test_cap(tmp_path):
+    _mkfile(str(tmp_path / "a" / "x"), (MAX_PARTS + 100) * TARGET_MB * MB)
+    assert stream_partitions(str(tmp_path / "a")) == MAX_PARTS == 4096
 
 
 def test_missing_dir_gives_floor(tmp_path):

@@ -5,8 +5,9 @@ Input shapes (see ``schemas.py``):
  * ``blocks``  — BLOCK_SCHEMA rows (one per block, txn stubs nested)
  * ``txns``    — TXN_ENVELOPE_SCHEMA rows (hash, type, json payload),
    standing in for the reference's N+1 ``transaction_get`` RPC
-   (client.py:39-51); in Spark the "N+1 fetch" becomes a broadcast join
-   of block headers onto a columnar txn table — one scan, zero RPCs.
+   (client.py:39-51); in Spark the "N+1 fetch" becomes one broadcast join
+   of the txn stubs onto a columnar txn table (:func:`typed_stubs`) — one
+   scan, zero RPCs — whose result every output below filters by type.
 
 Output shapes (FIXTURES.md F6):
  * payment edges  ``_from _to hash amount block timestamp _key``
@@ -46,69 +47,56 @@ def explode_txn_stubs(blocks: DataFrame) -> DataFrame:
     ).select("block", "block_time", F.col("txn.hash").alias("txn_hash"), F.col("txn.type").alias("txn_type"))
 
 
-def parse_txns(txns: DataFrame, txn_type: str, schema) -> DataFrame:
-    """Type-dispatch + schema parse (client.py:39-51): filter rows of one
-    ``type`` and apply that type's schema to the raw JSON payload.
+def typed_stubs(blocks: DataFrame, txns: DataFrame) -> DataFrame:
+    """Every txn stub of ``blocks`` joined once to its envelope's ``(type,
+    json)``: ``block block_time txn_hash txn_type type json``, the one join
+    all three graph outputs filter. The stub side is broadcast — a batch
+    bounds it — and prunes the envelope table to the batch's hashes."""
+    envelopes = txns.select(F.col("hash").alias("txn_hash"), "type", "json")
+    return envelopes.join(F.broadcast(explode_txn_stubs(blocks)), "txn_hash")
+
+
+def _of_type(typed: DataFrame, *types: str) -> DataFrame:
+    """Rows whose stub type and envelope type are both in ``types``."""
+    return typed.filter(F.col("txn_type").isin(*types) & F.col("type").isin(*types))
+
+
+def _parse(rows: DataFrame, schema) -> DataFrame:
+    """Apply a txn type's schema to the raw JSON payload (client.py:39-51).
 
     PERMISSIVE mode: a malformed payload yields a NULL struct rather than an
     exception — the engine's stand-in for the reference's ValidationError
     retry (follower.py:66-69); callers quarantine NULLs.
     """
-    return (
-        txns.filter(F.col("type") == txn_type)
-        .select(
-            F.col("hash").alias("txn_hash"),
-            F.from_json("json", schema).alias("t"),
-        )
+    return rows.select("block", "block_time", "txn_hash", F.from_json("json", schema).alias("t"))
+
+
+def payment_edges(typed: DataFrame) -> DataFrame:
+    """All payment edges, keyed and deduplicated — the idempotent-sink
+    contract of follower.py:205-207 (onDuplicate=ignore). ``typed`` is
+    :func:`typed_stubs`. payment_v1 gives one edge per txn
+    (follower.py:145-159); payment_v2 explodes its nested payments array,
+    one edge per payment (follower.py:160-176)."""
+    v1 = _parse(_of_type(typed, "payment_v1"), PAYMENT_V1_SCHEMA).select(
+        "block", "block_time", "t.hash", "t.payer", "t.payee", "t.amount"
     )
-
-
-def payment_edges_v1(blocks: DataFrame, txns: DataFrame) -> DataFrame:
-    """payment_v1 -> one payment edge per txn (follower.py:145-159)."""
-    stubs = explode_txn_stubs(blocks).filter(F.col("txn_type") == "payment_v1")
-    parsed = parse_txns(txns, "payment_v1", PAYMENT_V1_SCHEMA)
-    joined = stubs.join(F.broadcast(parsed), "txn_hash")
-    edges = joined.select(
-        F.concat(F.lit("accounts/"), F.col("t.payer")).alias("_from"),
-        F.concat(F.lit("accounts/"), F.col("t.payee")).alias("_to"),
-        F.col("t.hash").alias("hash"),
-        F.col("t.amount").alias("amount"),
-        F.col("block"),
-        F.col("block_time").alias("timestamp"),
-    )
-    return edges.withColumn("_key", canonical_md5_key(*PAYMENT_KEY_COLS))
-
-
-def payment_edges_v2(blocks: DataFrame, txns: DataFrame) -> DataFrame:
-    """payment_v2 -> explode nested payments array, one edge per payment
-    (follower.py:160-176)."""
-    stubs = explode_txn_stubs(blocks).filter(F.col("txn_type") == "payment_v2")
-    parsed = parse_txns(txns, "payment_v2", PAYMENT_V2_SCHEMA)
-    joined = stubs.join(F.broadcast(parsed), "txn_hash")
-    exploded = joined.select(
+    v2 = _parse(_of_type(typed, "payment_v2"), PAYMENT_V2_SCHEMA).select(
         "block", "block_time", "t.hash", "t.payer", F.explode("t.payments").alias("p")
-    )
-    edges = exploded.select(
+    ).select("block", "block_time", "hash", "payer", "p.payee", "p.amount")
+    edges = v1.unionByName(v2).select(
         F.concat(F.lit("accounts/"), F.col("payer")).alias("_from"),
-        F.concat(F.lit("accounts/"), F.col("p.payee")).alias("_to"),
+        F.concat(F.lit("accounts/"), F.col("payee")).alias("_to"),
         F.col("hash"),
-        F.col("p.amount").alias("amount"),
+        F.col("amount"),
         F.col("block"),
         F.col("block_time").alias("timestamp"),
     )
-    return edges.withColumn("_key", canonical_md5_key(*PAYMENT_KEY_COLS))
+    return edges.withColumn("_key", canonical_md5_key(*PAYMENT_KEY_COLS)).dropDuplicates(["_key"])
 
 
-def payment_edges(blocks: DataFrame, txns: DataFrame) -> DataFrame:
-    """All payment edges (v1 union v2), keyed and deduplicated — the
-    idempotent-sink contract of follower.py:205-207 (onDuplicate=ignore)."""
-    return payment_edges_v1(blocks, txns).unionByName(
-        payment_edges_v2(blocks, txns)
-    ).dropDuplicates(["_key"])
-
-
-def witness_edges(blocks: DataFrame, txns: DataFrame, strict_path0: bool = True) -> DataFrame:
+def witness_edges(typed: DataFrame, strict_path0: bool = True) -> DataFrame:
     """poc_receipts v1/v2 -> one edge per witness (follower.py:177-202).
+    ``typed`` is :func:`typed_stubs`.
 
     ``strict_path0=True`` reproduces the reference's ``path[0]``-only read
     (follower.py:180); False explodes every path element (the engine's more
@@ -118,16 +106,7 @@ def witness_edges(blocks: DataFrame, txns: DataFrame, strict_path0: bool = True)
     the path element has no receipt struct — the columnar equivalent of the
     reference's try/except AttributeError (follower.py:194-198).
     """
-    stubs = explode_txn_stubs(blocks).filter(
-        F.col("txn_type").isin("poc_receipts_v1", "poc_receipts_v2")
-    )
-    parsed = txns.filter(
-        F.col("type").isin("poc_receipts_v1", "poc_receipts_v2")
-    ).select(
-        F.col("hash").alias("txn_hash"),
-        F.from_json("json", POC_RECEIPTS_SCHEMA).alias("t"),
-    )
-    joined = stubs.join(F.broadcast(parsed), "txn_hash")
+    joined = _parse(_of_type(typed, "poc_receipts_v1", "poc_receipts_v2"), POC_RECEIPTS_SCHEMA)
 
     if strict_path0:
         with_path = joined.select(
@@ -166,21 +145,17 @@ def witness_edges(blocks: DataFrame, txns: DataFrame, strict_path0: bool = True)
     return edges.withColumn("_key", canonical_md5_key(*RECEIPT_KEY_COLS)).dropDuplicates(["_key"])
 
 
-def account_vertices(blocks: DataFrame, txns: DataFrame) -> DataFrame:
+def account_vertices(typed: DataFrame) -> DataFrame:
     """Distinct account vertices: payer union payee across payment types
     (follower.py:147,156,162,173 + duplicate-ignore import :206).
 
-    Only transactions referenced by a stub in ``blocks`` count — the
-    reference walks ``block.transactions`` (follower.py:143), never the txn
-    store at large; a left-semi join on the (broadcast) stub hashes
-    enforces that without moving the txn rows.
+    Only transactions referenced by a stub count — the reference walks
+    ``block.transactions`` (follower.py:143), never the txn store at
+    large — which :func:`typed_stubs` already guarantees; the envelope's
+    type alone picks the schema, whatever the stub says.
     """
-    stubs = explode_txn_stubs(blocks).select("txn_hash")
-    in_block = txns.join(
-        F.broadcast(stubs), txns["hash"] == stubs["txn_hash"], "left_semi"
-    )
-    v1 = parse_txns(in_block, "payment_v1", PAYMENT_V1_SCHEMA)
-    v2 = parse_txns(in_block, "payment_v2", PAYMENT_V2_SCHEMA)
+    v1 = _parse(typed.filter(F.col("type") == "payment_v1"), PAYMENT_V1_SCHEMA)
+    v2 = _parse(typed.filter(F.col("type") == "payment_v2"), PAYMENT_V2_SCHEMA)
     keys = (
         v1.select(F.col("t.payer").alias("_key"))
         .unionByName(v1.select(F.col("t.payee").alias("_key")))

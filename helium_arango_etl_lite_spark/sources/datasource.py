@@ -23,8 +23,9 @@ Usage::
             .load())
 
 ``what=blocks`` yields BLOCK_SCHEMA rows; ``what=txns`` yields
-TXN_ENVELOPE_SCHEMA rows (raw JSON payload preserved — each type branch
-applies its own schema downstream, operators/graph.py:parse_txns).
+TXN_ENVELOPE_SCHEMA rows (raw JSON payload preserved — after the one stub
+join, operators/graph.py:typed_stubs, each graph output applies its type's
+schema).
 
 Endpoints with the ``mock://`` scheme serve a deterministic synthetic
 chain (seeded per height) so the full distributed path is testable —

@@ -67,9 +67,9 @@ def stream_blocks(
 
 def read_txns(spark: SparkSession, path: str) -> DataFrame:
     """Transaction envelopes ``(hash, type, json)`` — the columnar stand-in
-    for the reference's per-txn RPC (client.py:39-51). Each type-dispatched
-    branch applies its own schema later via ``F.from_json``
-    (operators/graph.py:parse_txns)."""
+    for the reference's per-txn RPC (client.py:39-51). Each graph output
+    applies its type's schema later via ``F.from_json``, after the one stub
+    join (operators/graph.py:typed_stubs)."""
     return (
         spark.read.schema(_with_corrupt(TXN_ENVELOPE_SCHEMA))
         .option("mode", "PERMISSIVE")

@@ -2,7 +2,6 @@ from .sink import (
     RETENTION_BLOCKS,
     apply_retention,
     idempotent_append,
-    read_sink,
     with_block_bucket,
 )
 from .follow import follow, process_batch, sync_state
@@ -22,7 +21,6 @@ __all__ = [
     "RETENTION_BLOCKS",
     "apply_retention",
     "idempotent_append",
-    "read_sink",
     "with_block_bucket",
     "follow",
     "process_batch",

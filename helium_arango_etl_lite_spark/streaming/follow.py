@@ -18,21 +18,23 @@ re-expressed as Structured Streaming:
   landing zone, then stop); leaving ``available_now=False`` follows the
   zone continuously like the reference's tip-poll loop.
 
-Scale notes: the txn envelope table is read per micro-batch and pruned by
-the inner join on the batch's stub hashes; block headers are tiny and ride
-the broadcast side. Nothing here collects to the driver except the batch's
-distinct bucket list (a handful of longs).
+Scale notes: one broadcast join of the batch's txn stubs onto the txn
+envelope table (``operators.graph.typed_stubs``) feeds all three sinks.
+The only collect to the driver is the batch's bucket list, taken once
+from the block heights for both edge sinks' existing-keys probes.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.graph import account_vertices, payment_edges, witness_edges
-from .sink import idempotent_append
+from ..operators.graph import account_vertices, payment_edges, typed_stubs, witness_edges
+from .sink import BUCKET_COL, block_buckets, has_data_file, idempotent_append
 from ..sources.jsonl import CORRUPT_COL, read_txns, stream_blocks
 
 PAYMENTS = "payments"
@@ -66,25 +68,26 @@ def process_batch(
     if CORRUPT_COL in txns.columns:
         txns = txns.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
 
-    # Three sinks consume the same micro-batch; persist the inputs so the
-    # source (Python DataSource / JSON parse) is evaluated once, not once
-    # per sink action. In streaming, foreachBatch hands us a materialized
-    # batch for blocks but txns would re-read per action regardless.
+    # Three sinks filter the same stub join: persist it (and the blocks the
+    # bucket list also reads) so the source and the join run once, not once
+    # per sink action. Every edge's ``block`` is one of the block heights.
     blocks = blocks.persist()
-    txns = txns.persist()
+    typed = typed_stubs(blocks, txns).persist()
     try:
-        idempotent_append(spark, payment_edges(blocks, txns), f"{out_dir}/{PAYMENTS}")
+        buckets = block_buckets(blocks.select(F.col("height").alias("block")))
+        idempotent_append(
+            spark, payment_edges(typed), f"{out_dir}/{PAYMENTS}", buckets=buckets
+        )
         idempotent_append(
             spark,
-            witness_edges(blocks, txns, strict_path0=strict_path0),
+            witness_edges(typed, strict_path0=strict_path0),
             f"{out_dir}/{RECEIPTS}",
+            buckets=buckets,
         )
-        idempotent_append(
-            spark, account_vertices(blocks, txns), f"{out_dir}/{ACCOUNTS}", partitioned=False
-        )
+        idempotent_append(spark, account_vertices(typed), f"{out_dir}/{ACCOUNTS}")
     finally:
+        typed.unpersist()
         blocks.unpersist()
-        txns.unpersist()
         if raw_blocks is not None:
             raw_blocks.unpersist()
 
@@ -122,22 +125,32 @@ def follow(
 _NOT_CREATED = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
+def _max_block(spark: SparkSession, table: str) -> int | None:
+    """``max(block)`` of an edge table from its newest ``block_bucket``
+    holding a data file (an in-flight write leaves only ``_temporary``),
+    else from the table root."""
+    names = os.listdir(table) if os.path.isdir(table) else []
+    prefix = f"{BUCKET_COL}="
+    buckets = sorted((int(n[len(prefix):]) for n in names if n.startswith(prefix)), reverse=True)
+    dirs = (f"{table}/{BUCKET_COL}={b}" for b in buckets)
+    path = next((d for d in dirs if has_data_file(d)), table)
+    # top-1 instead of agg(max): one job, no shuffle; NULLs sort last
+    top = spark.read.schema("block long").parquet(path).orderBy(F.desc("block")).head(1)
+    return top[0]["block"] if top else None
+
+
 def sync_state(spark: SparkSession, out_dir: str) -> dict[str, int | None]:
     """Engine analog of the ``follower_info`` doc read-back
     (follower.py:100-103) and the chain-tip probe (client.py:21-23): max
-    synced block per edge table, from the sink itself. A table that does
-    not exist yet, or holds no data file yet because its first write is
-    still in flight, has synced nothing (``None``); any other read
-    failure raises."""
+    synced block per edge table, from the sink itself. Only the newest
+    bucket is read, so the poll costs the same at any graph size. A table
+    that does not exist yet, or holds no data file yet because its first
+    write is still in flight, has synced nothing (``None``); any other
+    read failure raises."""
     state: dict[str, int | None] = {}
     for table in (PAYMENTS, RECEIPTS):
         try:
-            row = (
-                spark.read.parquet(f"{out_dir}/{table}")
-                .agg(F.max("block").alias("h"))
-                .collect()[0]
-            )
-            state[table] = row["h"]
+            state[table] = _max_block(spark, f"{out_dir}/{table}")
         except AnalysisException as e:
             if e.getCondition() not in _NOT_CREATED:
                 raise

@@ -15,6 +15,7 @@ resume doc; stop/restart continues where the last committed batch ended.
 
 from __future__ import annotations
 
+import logging
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +30,8 @@ from .sink import RETENTION_BLOCKS, apply_retention
 #: hotspot inventory when the chain tip has advanced this many blocks past
 #: the inventory's height.
 INVENTORY_STALENESS_BLOCKS = 500
+
+log = logging.getLogger(__name__)
 
 
 def refresh_inventory_if_stale(
@@ -96,20 +99,26 @@ def run_service(
     blocks_stream = reader.load()
 
     def batch_fn(batch_blocks: DataFrame, epoch_id: int) -> None:
+        t0 = time.perf_counter()
         if batch_blocks.isEmpty():
             return
         bounds = batch_blocks.agg(
             F.min("height").alias("lo"), F.max("height").alias("hi")
         ).collect()[0]
+        lo, hi = bounds["lo"], bounds["hi"]
         txns = (
             spark.read.format("helium_chain")
             .option("endpoint", endpoint)
             .option("what", "txns")
-            .option("start", str(bounds["lo"]))
-            .option("end", str(bounds["hi"]))
+            .option("start", str(lo))
+            .option("end", str(hi))
             .load()
         )
         process_batch(spark, batch_blocks, txns, out_dir, strict_path0=strict_path0)
+        # per-batch sync latency, as the reference prints per block (follower.py:56,72)
+        lag = "" if end is None else f", {end - hi} to end"
+        ms = (time.perf_counter() - t0) * 1000
+        log.info("batch %d heights %d..%d %.0f ms%s", epoch_id, lo, hi, ms, lag)
 
     query = (
         blocks_stream.writeStream.foreachBatch(batch_fn)

@@ -10,9 +10,10 @@ by block bucket:
   model) inserts nothing twice;
 * **partition pruning** — the table is laid out as
   ``block_bucket = block // 7200`` directories. The anti-join's probe of
-  existing keys is pruned to only the buckets the incoming batch touches,
-  so the "read existing keys" cost is proportional to the batch's block
-  span, not the table size — load-bearing at 100 TB;
+  existing keys reads only the directories of the buckets the incoming
+  batch touches, schema pinned (no table listing, no footer inference),
+  so its cost is proportional to the batch's block span, not the table
+  size — load-bearing at 100 TB;
 * **retention** — the reference's disabled AQL delete (follower.py:210-214,
   "deletions not optimized yet") becomes a metadata-only partition drop:
   remove whole ``block_bucket=N`` directories below the floor. No row-level
@@ -42,18 +43,33 @@ def with_block_bucket(df: DataFrame, blocks_per_bucket: int = RETENTION_BLOCKS) 
     )
 
 
+def block_buckets(df: DataFrame) -> list[int]:
+    """The distinct ``block_bucket`` values of ``df.block``, deduplicated on
+    the driver: one job with no shuffle, one long per row collected."""
+    bucketed = with_block_bucket(df.select("block")).select(BUCKET_COL)
+    return sorted({r[0] for r in bucketed.collect()})
+
+
+def has_data_file(path: str) -> bool:
+    """Whether ``path`` holds a data file: Spark skips ``_``/``.`` names
+    (``_temporary``, ``_SUCCESS``, checksums)."""
+    return any(not n.startswith(("_", ".")) for n in os.listdir(path))
+
+
 def _existing_keys(
     spark: SparkSession, path: str, key_col: str, buckets: list[int] | None
 ) -> DataFrame | None:
-    if not os.path.isdir(path) or not any(
-        n.startswith(f"{BUCKET_COL}=") or n.endswith(".parquet") for n in os.listdir(path)
-    ):
+    """The keys already in the table, read from only the ``block_bucket=N``
+    directories of ``buckets`` (the unpartitioned table when ``None``)
+    that hold data; ``None`` when there are none."""
+    schema, dirs = f"`{key_col}` string", [path]
+    if buckets is not None:
+        schema += f", {BUCKET_COL} long"
+        dirs = [f"{path}/{BUCKET_COL}={b}" for b in buckets]
+    dirs = [d for d in dirs if os.path.isdir(d) and has_data_file(d)]
+    if not dirs:
         return None
-    existing = spark.read.parquet(path)
-    if buckets is not None and BUCKET_COL in existing.columns:
-        # partition pruning: only scan the buckets this batch can collide with
-        existing = existing.filter(F.col(BUCKET_COL).isin(buckets))
-    return existing.select(key_col)
+    return spark.read.schema(schema).option("basePath", path).parquet(*dirs).select(key_col)
 
 
 def idempotent_append(
@@ -61,7 +77,7 @@ def idempotent_append(
     df: DataFrame,
     path: str,
     key_col: str = "_key",
-    partitioned: bool | None = None,
+    buckets: list[int] | None = None,
 ) -> None:
     """Append rows whose ``key_col`` is not already present — the engine's
     ``onDuplicate="ignore"`` (follower.py:205-207).
@@ -69,37 +85,25 @@ def idempotent_append(
     ``df`` must already be deduplicated within itself (the graph operators
     end in ``dropDuplicates(["_key"])``). When the frame carries a ``block``
     column the table is written partitioned by ``block_bucket`` and the
-    existing-keys probe is pruned to the touched buckets.
+    existing-keys probe reads only the touched buckets: ``buckets`` when
+    the caller knows them (every bucket of ``df``; a superset is fine),
+    else derived from ``df``.
     """
-    if partitioned is None:
-        partitioned = "block" in df.columns
+    if "block" in df.columns:
+        df = with_block_bucket(df)
+        if buckets is None:
+            buckets = block_buckets(df)
+    else:
+        buckets = None
 
-    buckets: list[int] | None = None
-    persisted = None
-    if partitioned:
-        # the bucket probe and the write both consume the batch: persist it
-        # so the upstream dataflow (parse -> explode -> key) runs once
-        persisted = df = with_block_bucket(df).persist()
-        # micro-batch block span is tiny (a handful of buckets): cheap collect
-        buckets = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
+    existing = _existing_keys(spark, path, key_col, buckets)
+    if existing is not None:
+        df = df.join(existing, key_col, "left_anti")
 
-    try:
-        existing = _existing_keys(spark, path, key_col, buckets)
-        if existing is not None:
-            df = df.join(existing, key_col, "left_anti")
-
-        writer = df.write.mode("append")
-        if partitioned:
-            writer = writer.partitionBy(BUCKET_COL)
-        writer.parquet(path)
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
-
-
-def read_sink(spark: SparkSession, path: str) -> DataFrame:
-    """Read a sink table back (empty frame semantics left to the caller)."""
-    return spark.read.parquet(path)
+    writer = df.write.mode("append")
+    if buckets is not None:
+        writer = writer.partitionBy(BUCKET_COL)
+    writer.parquet(path)
 
 
 def apply_retention(

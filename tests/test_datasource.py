@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from helium_arango_etl_lite_spark.operators.graph import payment_edges
+from helium_arango_etl_lite_spark.operators.graph import payment_edges, typed_stubs
 from helium_arango_etl_lite_spark.sources.datasource import HeliumChainDataSource
 
 
@@ -46,7 +46,7 @@ def test_txn_envelopes_flow_into_graph_operators(spark):
         .load()
     )
     assert txns.count() == 10
-    edges = payment_edges(blocks, txns)
+    edges = payment_edges(typed_stubs(blocks, txns))
     got = {r["hash"]: r for r in edges.collect()}
     assert len(got) == 10
     # mock chain invariants: amount = (h*37) % 100000 + 1, block time ride-on

@@ -6,7 +6,9 @@ corrupt-record quarantine path. Fixture shapes follow FIXTURES.md F1-F6."""
 from __future__ import annotations
 
 import json
+import logging
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -256,6 +258,71 @@ def test_sync_state_unreadable_table_raises(spark, tmp_path):
         sync_state(spark, str(tmp_path / "out"))
 
 
+def test_probe_reads_only_the_batch_buckets(spark, tmp_path):
+    """A file Spark cannot read in an older bucket does not stop an append
+    to a newer one: the existing-keys probe reads only the batch's
+    buckets. Redelivering the batch still inserts nothing."""
+    out = tmp_path / "t"
+    idempotent_append(spark, spark.createDataFrame([("k1", 100)], ["_key", "block"]), str(out))
+    (out / "block_bucket=0" / "part-00000-stray.parquet").write_text("not a parquet file")
+    batch = spark.createDataFrame([("k2", 8_000), ("k3", 8_001)], ["_key", "block"])
+    idempotent_append(spark, batch, str(out), buckets=[1])
+    idempotent_append(spark, batch, str(out), buckets=[1])  # redelivery
+    idempotent_append(spark, batch, str(out))  # buckets derived from the frame
+    got = spark.read.option("basePath", str(out)).parquet(str(out / "block_bucket=1"))
+    assert sorted(r["_key"] for r in got.collect()) == ["k2", "k3"]
+
+
+def test_sync_state_reads_newest_bucket(spark, tmp_path):
+    """The sync height is the max of the newest bucket holding data: older
+    buckets are not read, and a newest bucket with only an in-flight
+    ``_temporary`` falls back to the one below."""
+    out = tmp_path / "out"
+    for table, blocks in (("payments", [100, 8_000, 15_001, 14_500]),
+                          ("poc_receipts", [7_199, 7_100])):
+        df = spark.createDataFrame([(f"k{b}", b) for b in blocks], ["_key", "block"])
+        idempotent_append(spark, df, str(out / table))
+    (out / "payments" / "block_bucket=0" / "part-00000-stray.parquet").write_text("x")
+    assert sync_state(spark, str(out)) == {"payments": 15_001, "poc_receipts": 7_199}
+    (out / "payments" / "block_bucket=3" / "_temporary" / "0").mkdir(parents=True)
+    assert sync_state(spark, str(out))["payments"] == 15_001
+
+
+#: Spark jobs of one 32-height follower batch (process_batch + sync_state)
+#: on a two-bucket graph in this session's configuration: one bucket list,
+#: one stub join shared by the three sinks, probes of the batch's buckets
+#: only and a newest-bucket sync height (a join per graph output and
+#: whole-table reads took 34-35).
+FOLLOW_BATCH_JOBS = 15
+
+
+def test_follow_batch_job_budget(spark, tmp_path):
+    from helium_arango_etl_lite_spark.sources.datasource import HeliumChainDataSource
+    from helium_arango_etl_lite_spark.streaming import process_batch
+
+    spark.dataSource.register(HeliumChainDataSource)
+
+    def chain(what, lo, hi):
+        return (
+            spark.read.format("helium_chain").option("endpoint", "mock://mixed")
+            .option("what", what).option("start", lo).option("end", hi).load()
+        )
+
+    out = str(tmp_path / "graph")
+    process_batch(spark, chain("blocks", 7_000, 7_399), chain("txns", 7_000, 7_399), out)
+    sc = spark.sparkContext
+    group = f"follow-batch-{os.getpid()}"
+    sc.setJobGroup(group, "one follower batch")
+    try:
+        process_batch(spark, chain("blocks", 7_400, 7_431), chain("txns", 7_400, 7_431), out)
+        state = sync_state(spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert state == {"payments": 7_431, "poc_receipts": 7_431 - 7_431 % 3}
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= FOLLOW_BATCH_JOBS, f"{len(jobs)} jobs"
+
+
 def test_gateway_inventory_source(spark, tmp_path):
     inv_dir = tmp_path / "inv"
     inv_dir.mkdir()
@@ -275,12 +342,13 @@ def test_gateway_inventory_source(spark, tmp_path):
     assert docs["hs1"]["location_geo"]["type"] == "Point"
 
 
-def test_run_service_end_to_end_mock_chain(spark, tmp_path):
+def test_run_service_end_to_end_mock_chain(spark, tmp_path, caplog):
     """The assembled service (python -m entry): mock chain -> streaming
     micro-batches -> distributed txn fetch -> graph tables, drained to a
     target height. Mock chain has one payment_v1 per height."""
     from helium_arango_etl_lite_spark.streaming.service import run_service
 
+    caplog.set_level(logging.INFO, logger="helium_arango_etl_lite_spark.streaming.service")
     state = run_service(
         spark,
         out_dir=str(tmp_path / "graph"),
@@ -296,6 +364,9 @@ def test_run_service_end_to_end_mock_chain(spark, tmp_path):
     assert {r["block"] for r in rows} == set(range(200, 241))
     accounts = spark.read.parquet(str(tmp_path / "graph" / "accounts"))
     assert accounts.count() > 0
+    # one log line per batch: epoch, heights, batch ms, distance to end
+    lines = [r.getMessage() for r in caplog.records if r.name.endswith(".service")]
+    assert any(re.fullmatch(r"batch \d+ heights 200\.\.215 \d+ ms, 25 to end", m) for m in lines), lines
 
 
 def test_service_refreshes_stale_inventory(spark, tmp_path):

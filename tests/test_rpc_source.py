@@ -7,7 +7,7 @@ import json
 
 import pytest
 
-from helium_arango_etl_lite_spark.operators.graph import payment_edges
+from helium_arango_etl_lite_spark.operators.graph import payment_edges, typed_stubs
 from helium_arango_etl_lite_spark.sources import (
     RpcError, RpcLandingZone, read_blocks, read_txns, rpc_call, split_corrupt,
 )
@@ -68,6 +68,6 @@ def test_fetch_window_lands_files_spark_can_process(spark, tmp_path):
     blocks, bad = split_corrupt(read_blocks(spark, str(tmp_path / "blocks")))
     txns, _ = split_corrupt(read_txns(spark, str(tmp_path / "txns")))
     assert bad.count() == 0
-    edges = payment_edges(blocks, txns).collect()
+    edges = payment_edges(typed_stubs(blocks, txns)).collect()
     assert len(edges) == 1
     assert edges[0]["_from"] == "accounts/A" and edges[0]["amount"] == 10
